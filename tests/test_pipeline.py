@@ -5,11 +5,19 @@ transforms -> N sinks with namespace routing, count equality asserted."""
 from __future__ import annotations
 
 import os
+import re
+import sys
+import threading
+import warnings
+from concurrent.futures import ThreadPoolExecutor
+from functools import partial
 
 import pyspark.sql.functions as F
 import pytest
+from pyspark.errors import AnalysisException
 
 from transporter_spark.plans import Pipeline
+from transporter_spark.plans.pipeline import _dispatch
 from transporter_spark.sources.files import read_table
 
 
@@ -79,6 +87,167 @@ def test_transform_ns_scoping(spark, sf_dir, tmp_path):
     region = read_table(spark, sf_dir, "region")
     assert metrics["nation -> jsonl[0]"] == nation.filter("n_regionkey = 0").count()
     assert metrics["region -> jsonl[0]"] == region.count()  # untouched
+
+
+def test_copy_keeps_columns_named_like_envelope_fields(spark, sf_dir, tmp_path):
+    """A source column named ``ts`` (or op/ns/data) is payload unless it
+    is consumed as the envelope's event time: a copy keeps every column."""
+    df = spark.createDataFrame([(1, "a")], "id long, ts string")
+    Pipeline("probe").source("dataframe", df=df, ns="probe").save(
+        "memory", view="envelope_names_probe"
+    ).run(spark)
+    got = spark.table("envelope_names_probe")
+    assert got.columns == ["id", "ts"]
+    assert [tuple(r) for r in got.collect()] == [(1, "a")]
+
+    out = str(tmp_path / "copy")
+    rows = (
+        Pipeline("events-copy")
+        .source("dir", path=sf_dir, namespaces="^events$")
+        .save("parquet", path=out + "/{ns}")
+        .run(spark)
+    )["rows"]
+    src = read_table(spark, sf_dir, "events")
+    back = spark.read.parquet(out + "/events")
+    assert back.columns == src.columns
+    assert rows["events -> parquet[0]"] == src.count()
+    assert {r.event_id: r for r in back.collect()} == {
+        r.event_id: r for r in src.collect()
+    }
+
+
+def test_failed_edge_raises_first_in_declaration_order(spark, tmp_path, capsys):
+    """A failing write raises from run(): the first failure in
+    declaration order wins, no exit event is printed, and no edge
+    declared after it is left to start, here the overwrite queued
+    behind the failed edge on the same path."""
+    df = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
+    first, later = tmp_path / "first", tmp_path / "later"
+    for taken in (first, later):
+        taken.mkdir()
+        (taken / "keep").write_text("x")
+    p = (
+        Pipeline("fails")
+        .source("dataframe", df=df, ns="t")
+        .save("jsonl", path=str(first), mode="errorifexists")
+        .save("parquet", path=str(tmp_path / "ok"))
+        .save("jsonl", path=str(later), mode="errorifexists")
+        .save("jsonl", path=str(first), mode="overwrite")
+    )
+    threads = set(threading.enumerate())
+    capsys.readouterr()
+    with pytest.raises(AnalysisException, match=re.escape(f"{first} already exists")):
+        p.run(spark)
+    assert '"event": "exit"' not in capsys.readouterr().out
+    assert os.listdir(first) == ["keep"]
+    assert not [
+        t for t in set(threading.enumerate()) - threads
+        if t.name.startswith("ThreadPoolExecutor")
+    ]
+
+
+def test_colliding_targets_run_in_declaration_order(spark, tmp_path, capsys):
+    """Edges that resolve to one target never overlap: appends to one
+    path add up, overwrites leave the last-declared edge's rows, and
+    console edges print in declaration order."""
+    df = spark.createDataFrame([(i, f"r{i}") for i in range(6)], "id long, v string")
+    appended, replaced = str(tmp_path / "appended"), str(tmp_path / "replaced")
+    p = (
+        Pipeline("collide")
+        .source("dataframe", df=df, ns="t")
+        .save("jsonl", path=appended, mode="append")
+        .save("parquet", path=replaced)
+        .save("console")
+        .transform("skip", field="id", operator="<", match=2)
+        .transform("rename", field_map={"v": "second_v"})
+        .save("jsonl", path=appended, mode="append")
+        .save("parquet", path=replaced)
+        .save("console")
+    )
+    capsys.readouterr()
+    rows = p.run(spark)["rows"]
+    assert list(rows) == [
+        "t -> jsonl[0]", "t -> parquet[1]", "t -> console[2]",
+        "t -> jsonl[3]", "t -> parquet[4]", "t -> console[5]",
+    ]
+    assert spark.read.json(appended).count() == 6 + 2
+    last = spark.read.parquet(replaced)
+    assert last.columns == ["id", "second_v"]
+    assert sorted(r.id for r in last.collect()) == [0, 1]
+    out = capsys.readouterr().out
+    assert out.index("r5") < out.index("second_v")
+
+
+def test_run_jobs_inherit_job_group_and_tags(spark, sf_dir, tmp_path):
+    """Every job run() launches, from the concurrent loads and the
+    concurrent writes, stays in the caller's job group and carries its
+    tags, and wrapping the threads raises no tag-inheritance warning.
+    Parquet schema inference runs outside any SQL execution, so the
+    session tag reaches only SQL jobs (as in a serial loop); the
+    context tag, a local property, reaches all of them."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup())
+    sc.setJobGroup("g", "pipeline attribution")
+    spark.addTag("t")
+    sc.addJobTag("ctx")
+    try:
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            rows = (
+                Pipeline("tagged")
+                .source("dir", path=sf_dir, namespaces="^(nation|region|supplier)$")
+                .save("parquet", path=str(tmp_path / "{ns}"))
+                .save("memory", view="tagged_{ns}")
+                .run(spark)
+            )["rows"]
+    finally:
+        spark.removeTag("t")
+        sc.removeJobTag("ctx")
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert not [w for w in caught if "Tags will not be inherited" in str(w.message)]
+    assert set(tracker.getJobIdsForGroup()) == ungrouped
+    store = sc._jsc.sc().statusStore()
+    tags = {
+        j: set(store.job(j).jobTags().mkString("\n").split("\n"))
+        for j in tracker.getJobIdsForGroup("g")
+    }
+    assert all("ctx" in t for t in tags.values())
+    sql_jobs = [t for t in tags.values() if any(x.startswith("spark-session-") for x in t)]
+    assert len(sql_jobs) >= len(rows)
+    assert all(any(x.endswith("-t") for x in t) for t in sql_jobs)
+
+
+def test_dispatch_stress_keeps_serial_contract(spark):
+    """Short lanes on more threads than cores, switching threads as
+    often as the interpreter allows: every result lands, every step
+    below the lowest failing one runs exactly once, and that step's
+    error is the one raised."""
+    ran = []
+
+    def step(i):
+        ran.append(i)
+        if i in (150, 151, 397):
+            raise ValueError(i)
+        return i * i
+
+    def lanes(n):
+        return [[(i, partial(step, i)) for i in range(s, n, 20)] for s in range(20)]
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(16) as pool, ThreadPoolExecutor(1) as caller:
+            ok = caller.submit(_dispatch, spark, pool, lanes(150)).result(timeout=120)
+            assert ok == [i * i for i in range(150)]
+            ran.clear()
+            failed = caller.submit(_dispatch, spark, pool, lanes(400))
+            with pytest.raises(ValueError, match="^150$"):
+                failed.result(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert sorted(i for i in ran if i < 150) == list(range(150))
 
 
 def test_pipeline_requires_source_and_sink(spark):

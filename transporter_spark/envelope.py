@@ -51,10 +51,12 @@ def to_envelope(
     - ``op_col``: derive op per row from an existing column (CDC feeds);
       otherwise constant ``op``.
     - ``payload_cols``: subset of columns to pack into ``data`` (default
-      all non-envelope columns).
+      every column not consumed as ``ts_col`` or ``op_col``; a source
+      column that merely shares an envelope field's name, such as
+      ``ts``, stays in the payload).
     """
     cols = list(payload_cols) if payload_cols is not None else [
-        c for c in df.columns if c not in ENVELOPE_FIELDS
+        c for c in df.columns if c not in (ts_col, op_col)
     ]
     ts_expr = F.col(ts_col) if ts_col else F.current_timestamp()
     op_expr = F.lower(F.col(op_col).cast("string")) if op_col else F.lit(op)

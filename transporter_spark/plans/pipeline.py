@@ -14,9 +14,14 @@ becomes
 
 Differences from the reference, by design:
 - The Node tree + goroutine pipes + channel fan-out
-  (pipeline/node.go:56-85, pipe/pipe.go:26-30) collapse into N
-  DataFrame plans sharing one source scan: fan-out costs nothing until
-  action time, and Spark schedules the partitions.
+  (pipeline/node.go:56-85, pipe/pipe.go:26-30) collapse into one
+  DataFrame plan per (namespace x sink) edge. Like the reference's
+  goroutines, the edges run at once: ``run`` loads the namespaces, then
+  writes every edge, each phase from a driver thread pool as wide as
+  ``defaultParallelism``, so one edge's job dispatch and commit overlap
+  another's tasks. Edges that resolve to the same target (one path, one
+  memory view, or the console, which all share stdout) run one after
+  another in declaration order.
 - Namespace regex filtering happens at TWO levels, like the reference:
   table-level pruning before any scan (sources/catalog.py — the
   reference's listing filter, mongodb/reader.go:95-113) and row-level
@@ -31,11 +36,15 @@ Differences from the reference, by design:
 from __future__ import annotations
 
 import json
+import threading
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
-from typing import Callable, Dict, List, Optional, Tuple
+from functools import partial
+from typing import Callable, Dict, List, Optional, Tuple, TypeVar
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from transporter_spark.envelope import from_envelope, to_envelope
 from transporter_spark.registry import build_operator
@@ -49,6 +58,60 @@ class _Edge:
     config: dict
     ns_pattern: Optional[str]
     transforms: List[Tuple[str, Optional[str], dict]]  # (op, ns_pattern, cfg)
+
+
+T = TypeVar("T")
+
+
+def _dispatch(
+    spark: SparkSession,
+    pool: ThreadPoolExecutor,
+    lanes: List[List[Tuple[int, Callable[[], T]]]],
+) -> List[T]:
+    """Run the lanes concurrently on ``pool``, each lane's steps in order.
+
+    Steps are numbered in declaration order, and each lane's numbers
+    ascend. Once step k fails, no step numbered above k starts; steps
+    below k still run, so the failure raised (the lowest-numbered one)
+    is the one a serial loop would have raised. Every thread inherits
+    the caller's job group, job tags and local properties. Returns the
+    results in step order once every step has succeeded."""
+    results: Dict[int, T] = {}
+    errors: Dict[int, Exception] = {}
+    lock = threading.Lock()
+
+    def run_lane(lane: List[Tuple[int, Callable[[], T]]]) -> None:
+        for i, step in lane:
+            with lock:
+                if errors and i > min(errors):
+                    return
+            try:
+                out = step()
+            except Exception as exc:  # raised on the caller thread below
+                with lock:
+                    errors[i] = exc
+                return
+            with lock:
+                results[i] = out
+
+    target = inheritable_thread_target(spark)(run_lane)
+    for fut in [pool.submit(target, lane) for lane in lanes]:
+        fut.result()
+    if errors:
+        raise errors[min(errors)]
+    return [results[i] for i in sorted(results)]
+
+
+def _target(ns: str, edge: _Edge) -> tuple:
+    """What an edge writes to: edges with equal targets must not overlap."""
+    kind, cfg = edge.kind, edge.config
+    if kind in ("parquet", "jsonl"):
+        return ("path", cfg["path"].format(ns=ns))
+    if kind == "memory":
+        return ("view", cfg.get("view", "out_{ns}").format(ns=ns))
+    if kind == "jdbc":
+        return ("jdbc", cfg["url"], cfg.get("table", ns))
+    return (kind,)  # console: every edge shares stdout
 
 
 @dataclass
@@ -83,17 +146,25 @@ class Pipeline:
 
     # -- execution ---------------------------------------------------------
 
-    def _load_source(self, spark: SparkSession) -> Dict[str, DataFrame]:
-        """Returns {namespace: envelope DataFrame}."""
+    def _load_source(
+        self, spark: SparkSession, pool: ThreadPoolExecutor
+    ) -> Dict[str, DataFrame]:
+        """Returns {namespace: envelope DataFrame}. A ``dir`` source
+        reads its tables concurrently: each read peeks the parquet
+        footer and runs a schema-inference job."""
         kind, cfg = self._source
         if kind == "dir":
             base = cfg["path"]
             pattern = cfg.get("namespaces", ".*")
             names = expand_namespaces(list_dir_namespaces(base), pattern)
-            return {
-                ns: to_envelope(read_table(spark, base, ns), ns=ns)
-                for ns in names
-            }
+
+            def load(ns: str) -> DataFrame:
+                return to_envelope(read_table(spark, base, ns), ns=ns)
+
+            frames = _dispatch(
+                spark, pool, [[(i, partial(load, ns))] for i, ns in enumerate(names)]
+            )
+            return dict(zip(names, frames))
         if kind == "parquet":
             ns = cfg.get("ns", cfg["path"])
             return {ns: to_envelope(spark.read.parquet(cfg["path"]), ns=ns)}
@@ -252,18 +323,33 @@ class Pipeline:
 
     def run(self, spark: SparkSession) -> dict:
         """Execute every (namespace x sink) edge; returns the metrics
-        event the reference would emit on its events channel."""
+        event the reference would emit on its events channel.
+
+        Edges are planned on the calling thread, then written
+        concurrently, ``defaultParallelism`` at a time; edges with one
+        target are written in declaration order. If an edge fails, no
+        later-declared edge starts, the first failure in declaration
+        order is raised once the running edges finish, and no event is
+        printed."""
         if self._source is None or not self._sinks:
             raise ValueError("pipeline needs a source and at least one sink")
-        frames = self._load_source(spark)
-        metrics: Dict[str, int] = {}
-        for ns, env in frames.items():
-            for i, edge in enumerate(self._sinks):
-                routed = self._apply_edge(env, ns, edge)
-                if routed is None:
-                    continue
-                rows = self._write(routed, ns, edge, spark)
-                metrics[f"{ns} -> {edge.kind}[{i}]"] = rows
-        event = {"event": "exit", "pipeline": self.name, "rows": metrics}
+        pool = ThreadPoolExecutor(spark.sparkContext.defaultParallelism)
+        try:
+            frames = self._load_source(spark, pool)
+            names: List[str] = []
+            lanes: Dict[tuple, list] = {}
+            for ns, env in frames.items():
+                for i, edge in enumerate(self._sinks):
+                    routed = self._apply_edge(env, ns, edge)
+                    if routed is None:
+                        continue
+                    write = partial(self._write, routed, ns, edge, spark)
+                    lanes.setdefault(_target(ns, edge), []).append((len(names), write))
+                    names.append(f"{ns} -> {edge.kind}[{i}]")
+            rows = _dispatch(spark, pool, list(lanes.values()))
+        finally:
+            # on an interrupt, lanes still queued never start
+            pool.shutdown(cancel_futures=True)
+        event = {"event": "exit", "pipeline": self.name, "rows": dict(zip(names, rows))}
         print(json.dumps(event))
         return event
